@@ -19,8 +19,9 @@ object PlanDump {
     val names = args(2).split(",").toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     // ad-hoc conf overrides (QBench's device, r19): lets a conf-flagged
-    // variant's plan be dumped as the honest "before" evidence, e.g.
-    //   SPARK_GRAFT_CONF="spark.graft.similarityJoin.pruneFirst=false"
+    // variant's plan be dumped as the honest "before" evidence, e.g. the
+    // naive nested-loop similarity join:
+    //   SPARK_GRAFT_CONF='spark.graft.similarityJoin.rewrite=false'
     val overrides = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
       .split(";").filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)

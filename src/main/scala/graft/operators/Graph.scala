@@ -163,32 +163,13 @@ object Graph {
     // the filtered view iff ≥1 base order produced it ⟺ it is in the
     // dedup of the base orders' own edge list (what r18 built).
     val spark = t.orders.sparkSession
-    // r18 shape (A/B control for the interleaved keep/revert protocol):
-    // each phase builds its own edge table from its own orders subset
-    if (spark.conf.getOption("spark.graft.q156.sharedEdges").contains("false")) {
-      def edgesOf(orders: DataFrame) = orders
-        .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
-        .select(expr("o_custkey * 2").as("src"),
-          expr("l_suppkey * 2 + 1").as("dst"))
-      val baseOrders = t.orders
-        .filter(col("o_orderdate") < lit(WarmCutoff).cast("timestamp"))
-      val stored0 = pagerank(edgesOf(baseOrders), Iterations)
-        .localCheckpoint(false)
-      return warmPagerank(edgesOf(t.orders), WarmRounds, stored0)
-        .join(stored0.select(col("node"),
-          col("rank_ppb").as("base_rank_ppb")), Seq("node"), "left")
-        .filter(col("node") % 2 === 1)
-        .select(expr("node DIV 2").as("supplier"), col("rank_ppb"),
-          coalesce(col("base_rank_ppb"), lit(0L)).as("base_rank_ppb"))
-        .smallSort("supplier")
-    }
     val shuffleN = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val directed = t.orders
       .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
       .select(expr("o_custkey * 2").as("src"),
         expr("l_suppkey * 2 + 1").as("dst"),
         (col("o_orderdate") < lit(WarmCutoff).cast("timestamp")).as("is_base"))
-    val flagged = withStaticPlan(spark) {
+    val flagged = PlanScope.staticPlan(spark) {
       val reversed = directed.select(col("dst").as("src"),
         col("src").as("dst"), col("is_base"))
       directed.unionByName(reversed)
@@ -486,7 +467,7 @@ object Graph {
     // scope the flip via session.cloneSession().
     val spark = directed.sparkSession
     val shuffleN = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val edges = withStaticPlan(spark) {
+    val edges = PlanScope.staticPlan(spark) {
       val reversed =
         if (weighted)
           directed.select(col("dst").as("src"), col("src").as("dst"), col("w"))
@@ -511,16 +492,6 @@ object Graph {
     pagerankOnEdges(edges, iterations, seed, weighted, warm)
   }
 
-  /** AQE off while a barrier frame plans its RDD (see the pagerankCore
-    * scaladoc block above) — restores on any exit; session-global while
-    * the thunk runs (single-threaded-harness assumption, documented
-    * there). */
-  private def withStaticPlan[A](spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
-    val was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try f finally spark.conf.set("spark.sql.adaptive.enabled", was)
-  }
-
   /** The superstep loop over a PRE-BUILT edge table: `edges` must be the
     * symmetric deduped (src, dst[, w_ppm]) frame, hash(src)-partitioned
     * and checkpointed (what pagerankCore builds). Split out (r19) so
@@ -533,7 +504,7 @@ object Graph {
       weighted: Boolean = false,
       warm: Option[DataFrame] = None): DataFrame = {
     val spark = edges.sparkSession
-    val (verts, nn) = withStaticPlan(spark) {
+    val (verts, nn) = PlanScope.staticPlan(spark) {
       val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       val degN = deg.select(col("src").as("node"), col("outdeg"))
         .withColumn("is_seed", seed.getOrElse(lit(true)))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Serve._
+import PlanScope.{modelReduce, staticPlan}
 
 /** Similarity search over the embeddings table (`Array[Float]`, 64-dim) —
   * the training-data-pipeline mandate: brute-force cosine top-k as the
@@ -375,42 +376,9 @@ object Similarity {
     * frame (seedTag 143); q157's product quantizer runs it once per
     * 16-d subspace (seedTags 15700+s). Returns (final centroids,
     * centroids the final E-step assigned against, d). */
-  /** Static planning for the model-sized training jobs (r18
-    * optimization round, the bpeTrainCore discipline): every Lloyd/PQ
-    * round is a small aggregate ending in a ≤k·d-row collect, and under
-    * AQE each round pays extra query-stage jobs plus adaptive
-    * re-planning round-trips — driver latency on frames that are
-    * model-bounded by contract. Values are untouched (AQE never changes
-    * results); the declared query's SERVING plan is constructed after
-    * training returns, outside this scope, so its adaptive plan (and
-    * the PlanAudit/ExchangeAudit pins) are unaffected. Session-global
-    * while a training loop runs — the harness constructs queries
-    * single-threaded. */
-  private def withStaticPlan[A](df: DataFrame)(f: => A): A = {
-    val spark = df.sparkSession
-    val was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // model-sized REDUCE fan-in (r19): every aggregate planned inside a
-    // training scope reduces to ≤ k·d model rows by contract, so the
-    // session-wide reduce fan-out is (cores − a few) near-empty reduce
-    // tasks per round job — pure scheduling overhead at ANY scale (the
-    // map side follows the input partitioning and is untouched; all
-    // training aggregates are exact integer sums, so partition count
-    // cannot move a value — the CPUS=7 robustness sweep pins that).
-    // Conf-flagged (0 disables) for the interleaved A/B protocol.
-    val reduceParts = spark.conf
-      .getOption("spark.graft.train.reduceParts").getOrElse("4").toInt
-    val wasN = spark.conf.get("spark.sql.shuffle.partitions")
-    if (reduceParts > 0 && reduceParts < wasN.toInt)
-      spark.conf.set("spark.sql.shuffle.partitions", reduceParts)
-    try f finally {
-      spark.conf.set("spark.sql.adaptive.enabled", was)
-      spark.conf.set("spark.sql.shuffle.partitions", wasN)
-    }
-  }
-
   private[graft] def lloydCore(qframe: DataFrame, k: Int, iterations: Int,
-                               seedTag: Int): (Array[Long], Array[Long], Int) = withStaticPlan(qframe) {
+                               seedTag: Int): (Array[Long], Array[Long], Int) =
+    staticPlan(qframe.sparkSession) { modelReduce(qframe.sparkSession) {
     val seedIds = qframe.select(col("vec_id"))
       .withColumn("h", expr(TextDedup.h60(seedTag, "CAST(vec_id AS STRING)")))
       .orderBy("h", "vec_id").limit(k)
@@ -442,7 +410,7 @@ object Similarity {
       ca = next
     }
     (ca, caIn, d)
-  }
+  } }
 
   /** The k squared-L2 distance columns s1..sk of (qd, qq) rows against
     * centroid array `ca` riding as constant-folded literals — the
@@ -454,15 +422,7 @@ object Similarity {
     * re-PARSES ~650 numeric tokens per training round — GapProbe
     * measured 0.19 s/round of driver latency on the fused IVF-PQ
     * trainer in CONSTRUCT alone, before analysis even starts.
-    * lit()+array()+call_function build the identical unresolved tree
-    * object-by-object (same resolution, same constant folding, same
-    * codegen — values bit-identical); the parser never runs.
-    * Conf-flagged for the interleaved A/B protocol. */
-  private def fastLitOn: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.train.fastLit", "true") == "true"
-
-  /** ONE Literal node (typedlit), not CreateArray over d element
+    * ONE Literal node (typedlit), not CreateArray over d element
     * literals: Dataset construction analyzes eagerly, and the analyzer
     * batches walking 65 nodes per centroid column × k columns × legs
     * were the measured residue after the parser was cut (GapProbe:
@@ -472,26 +432,19 @@ object Similarity {
   private def constArray(cs: Array[Long]): Column =
     lit(cs.map(_.toDouble))
 
-  /** vec_dot(<column>, <driver-held constant vector>) — see fastLitOn. */
+  /** vec_dot(<column>, <driver-held constant vector>) — see constArray. */
   private def vecDotLit(v: String, cs: Array[Long]): Column =
-    if (fastLitOn) call_function("vec_dot", col(v), constArray(cs))
-    else expr(s"vec_dot($v, " + cs.mkString("array(", "D, ", "D)") + ")")
+    call_function("vec_dot", col(v), constArray(cs))
 
   /** rd = qd − centroid(cluster): the residual via one array-of-arrays
     * lookup (k·d driver model state, constant-folded). Shared by the
-    * residual-PQ pipelines; parser-free under fastLitOn. */
+    * residual-PQ pipelines; parser-free. */
   private def residualCol(ca: Array[Long], kCoarse: Int, d: Int,
-                          src: String = "qd"): Column =
-    if (fastLitOn) {
-      val cents = array((1 to kCoarse).map(j =>
-        constArray(ca.slice((j - 1) * d, j * d))): _*)
-      zip_with(col(src), element_at(cents, col("cluster")), (a, b) => a - b)
-    } else {
-      val centsLit = (1 to kCoarse).map(j =>
-        ca.slice((j - 1) * d, j * d).mkString("array(", "D, ", "D)"))
-        .mkString("array(", ", ", ")")
-      expr(s"zip_with($src, element_at($centsLit, cluster), (a, b) -> a - b)")
-    }
+                          src: String = "qd"): Column = {
+    val cents = array((1 to kCoarse).map(j =>
+      constArray(ca.slice((j - 1) * d, j * d))): _*)
+    zip_with(col(src), element_at(cents, col("cluster")), (a, b) => a - b)
+  }
 
   private def coarseDistCols(frame: DataFrame, ca: Array[Long],
                              d: Int, k: Int): DataFrame = {
@@ -1030,7 +983,8 @@ object Similarity {
     * codebooks, d). */
   private[graft] def ivfPqTrainFused(qframe: DataFrame, kCoarse: Int,
       coarseIters: Int, m: Int, ksub: Int,
-      subIters: Int): (Array[Long], Seq[Array[Long]], Int) = withStaticPlan(qframe) {
+      subIters: Int): (Array[Long], Seq[Array[Long]], Int) =
+    staticPlan(qframe.sparkSession) { modelReduce(qframe.sparkSession) {
     val d = qframe.select(expr("size(qd)")).head().getInt(0)
     val sub = d / m
     def slices(s: Int) = qframe
@@ -1085,7 +1039,7 @@ object Similarity {
       live.foreach(ss => cas(ss) = next(ss))
     }
     (cas(-1), (0 until m).map(cas(_)), d)
-  }
+  } }
 
   /** q160 — RESIDUAL IVF-PQ (`by_residual=true`, the actual FAISS
     * `IndexIVFPQ` default): the codebooks quantize the RESIDUAL
@@ -1683,7 +1637,8 @@ object Similarity {
     * job over a subspace-tagged union. q160 trains residual codebooks
     * through this (tagBase 16000). */
   private[graft] def pqTrainFused(frame: DataFrame, m: Int, sub: Int,
-      ksub: Int, iters: Int, tagBase: Int): Seq[Array[Long]] = withStaticPlan(frame) {
+      ksub: Int, iters: Int, tagBase: Int): Seq[Array[Long]] =
+    staticPlan(frame.sparkSession) { modelReduce(frame.sparkSession) {
     def slices(s: Int) = frame
       .select(col("vec_id"), expr(s"slice(qd, ${s * sub + 1}, $sub)").as("qd"))
       .withColumn("qq", expr("vec_dot(qd, qd)"))
@@ -1721,7 +1676,7 @@ object Similarity {
       (0 until m).foreach(s => cas(s) = next(s))
     }
     cas.toSeq
-  }
+  } }
 
   def kmeansFixedPoint(embeddings: DataFrame, k: Int,
                        iterations: Int): DataFrame = {

@@ -60,23 +60,6 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   val EnabledKey = "spark.graft.similarityJoin.rewrite"
 
-  /** r19: evaluate the positional prune BEFORE the sorted-merge
-    * similarity. r18 put the prune in the candidate join's own condition
-    * and the re-applied predicate in a Filter above it — but predicate
-    * pushdown folds the Filter's conjuncts IN FRONT of the join's
-    * (PushPredicateThroughJoin appends the old join condition after the
-    * pushed filter conjuncts), so the executed conjunct order was
-    * (user conjuncts, sim-merge, prune): the prune ran only on rows that
-    * had already paid the O(|A|+|B|) merge it exists to skip — exactly
-    * why the r18 driver measured q97 flat. Now the whole re-applied
-    * predicate is ordered cheap-to-expensive in ONE Filter (user's
-    * non-sim conjuncts in original order, then the prune, then the sim
-    * conjuncts) and the join carries only the equi keys, so the pushed
-    * order IS the evaluation order. Value-identical: conjunction
-    * reordering over deterministic, never-null predicates. Flag for the
-    * interleaved A/B protocol; default on. */
-  val PruneFirstKey = "spark.graft.similarityJoin.pruneFirst"
-
   /** r19: round-robin-spread a parallelism-starved probe side. The gram
     * explode multiplies per-row CPU (hash probes + prune + merges on
     * every matching gram row) without growing the INPUT bytes the scan
@@ -85,15 +68,13 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * SF: 180 KB input → 1 task → every one of ~10⁷ candidate rows on one
     * thread; the 8-vs-32-core bench ratio measured exactly 1.0). When
     * the side that will stream through the hash join (the larger one —
-    * the planner builds on the smaller) is estimated below this
-    * threshold, insert a shuffle=true Repartition to the session's
-    * shuffle parallelism under the explode. Scale-adaptive by
-    * construction: numShufflePartitions follows the core-count sweep,
-    * and any side past the threshold (i.e. one with real scan
-    * parallelism) is left alone — at 100 TB this never fires; ≤ 0
-    * disables. */
-  val SpreadMaxBytesKey = "spark.graft.similarityJoin.spreadMaxBytes"
-  private val SpreadMaxBytesDefault: Long = 64L << 20
+    * the planner builds on the smaller) is estimated at or below this
+    * size, insert a shuffle=true Repartition to the session's shuffle
+    * parallelism under the explode. Scale-adaptive by construction:
+    * numShufflePartitions follows the core-count sweep, and any side
+    * past the threshold (i.e. one with real scan parallelism) is left
+    * alone — at 100 TB this never fires. */
+  private val SpreadMaxBytes: Long = 64L << 20
 
   private def threshold(e: Expression): Option[Double] = e match {
     case t if t.foldable && t.dataType == DoubleType =>
@@ -159,7 +140,7 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
                        tag: String, spread: Boolean): (LogicalPlan, Attribute, Attribute, Attribute, Attribute) = {
     val idAlias = Alias(MonotonicallyIncreasingID(), s"__sjr_${tag}id")()
     val gramsAlias = Alias(TrigramSet(strExpr), s"__sjr_${tag}grams")()
-    // see SpreadMaxBytesKey: round-robin under the id/grams projection,
+    // see SpreadMaxBytes: round-robin under the id/grams projection,
     // so the shuffle carries the raw side (no gram arrays) and the ids
     // are assigned once above it
     val base =
@@ -185,12 +166,10 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
                       lStr: Expression, rStr: Expression): LogicalPlan = {
     // spread the side that will STREAM through the hash join (the larger
     // one; tie → left, matching the planner's build-right tie-break) when
-    // it is too small for scan parallelism — see SpreadMaxBytesKey
-    val spreadMax = conf.getConfString(SpreadMaxBytesKey,
-      SpreadMaxBytesDefault.toString).toLong
+    // it is too small for scan parallelism — see SpreadMaxBytes
     val (lSz, rSz) = (j.left.stats.sizeInBytes, j.right.stats.sizeInBytes)
-    val spreadL = spreadMax > 0 && lSz >= rSz && lSz <= spreadMax
-    val spreadR = spreadMax > 0 && rSz > lSz && rSz <= spreadMax
+    val spreadL = lSz >= rSz && lSz <= SpreadMaxBytes
+    val spreadR = rSz > lSz && rSz <= SpreadMaxBytes
     val (lGen, lId, lGrams, lPos, lGram) = prefixed(j.left, lStr, t, "l", spreadL)
     val (rGen, rId, rGrams, rPos, rGram) = prefixed(j.right, rStr, t, "r", spreadR)
     // candidate key: shared prefix gram + any equality conjuncts the
@@ -231,28 +210,22 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
              (s.left.semanticEquals(rStr) && s.right.semanticEquals(lStr)) =>
         simSorted
     }
-    val pruneFirst = conf.getConfString(PruneFirstKey, "true") == "true"
-    val filtered =
-      if (pruneFirst) {
-        // cost-ordered single Filter (see PruneFirstKey): the user's
-        // non-sim conjuncts first (cheap row kills like key_a < key_b),
-        // then the integer-only positional prune, then the sorted-merge
-        // sim conjuncts — predicate pushdown folds this into the join
-        // condition IN THIS ORDER, so And's short-circuit does the
-        // skipping the prune is for
-        val (simConj, otherConj) = splitConjunctivePredicates(rewrittenCond)
-          .partition(_.exists(_.isInstanceOf[TrigramSimSorted]))
-        val j2 = Join(lGen, rGen, Inner,
-          Some((EqualTo(lGram, rGram) +: equis).reduce(And)), JoinHint.NONE)
-        Filter((otherConj ++ (posPrune +: simConj)).reduce(And), j2)
-      } else {
-        // r18 shape (A/B control): prune in the join's own condition —
-        // pushdown lands it AFTER the re-applied sim merge
-        val j2 = Join(lGen, rGen, Inner,
-          Some((EqualTo(lGram, rGram) +: equis :+ posPrune).reduce(And)),
-          JoinHint.NONE)
-        Filter(rewrittenCond, j2)
-      }
+    // ONE cost-ordered Filter (r19): the user's non-sim conjuncts first
+    // (cheap row kills like key_a < key_b), then the integer-only
+    // positional prune, then the sorted-merge sim conjuncts; the join
+    // carries only the equi keys. Predicate pushdown folds this Filter
+    // into the join condition IN THIS ORDER, so And's short-circuit does
+    // the skipping the prune is for. (r18 put the prune in the join's own
+    // condition; PushPredicateThroughJoin appends the old join condition
+    // AFTER the pushed conjuncts, so the prune ran only on rows that had
+    // already paid the merge — why r18 measured q97 flat.)
+    // Value-identical: conjunction reordering over deterministic,
+    // never-null predicates.
+    val (simConj, otherConj) = splitConjunctivePredicates(rewrittenCond)
+      .partition(_.exists(_.isInstanceOf[TrigramSimSorted]))
+    val j2 = Join(lGen, rGen, Inner,
+      Some((EqualTo(lGram, rGram) +: equis).reduce(And)), JoinHint.NONE)
+    val filtered = Filter((otherConj ++ (posPrune +: simConj)).reduce(And), j2)
     // dedup candidates that shared several prefix grams — by row id, so
     // genuinely duplicate input rows keep their multiplicity
     val keep = (j.left.output ++ j.right.output ++ Seq(lId, rId))

@@ -1,12 +1,16 @@
 package graft
 
+import graft.functions.TrigramSimSorted
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, Least, PosExplode}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Repartition}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 
 /** The similarity-join optimizer rule: exactness vs the naive nested-loop
   * plan, plan shape (no product join after rewrite), multiplicity via row
-  * ids, edge semantics (short/null strings), and the opt-out conf. */
+  * ids, edge semantics (short/null strings), the opt-out conf, and the
+  * q97 plan devices (prune-first conjunct order, streamed-side spread). */
 class SimilarityJoinRewriteSpec extends SparkSpec {
 
   private val EnabledKey = graft.plans.SimilarityJoinRewrite.EnabledKey
@@ -119,6 +123,54 @@ class SimilarityJoinRewriteSpec extends SparkSpec {
       val got = withRule(on = true)(collectPairs(naiveJoin(df, thresh)))
       assert(got == expected, s"thresh=$thresh seed=$seed")
     }
+  }
+
+  test("q97 plan: prune conjunct precedes the sim merge; one spread under the streamed explode") {
+    import spark.implicits._
+    // q97's shape: a within-brand self-join on name similarity
+    val part = Seq((1L, "b1", "Red Steel Bolt"), (2L, "b1", "red steel bolts"),
+      (3L, "b2", "blue copper pipe"), (4L, "b2", "Blue Copper Pipes"))
+      .toDF("p_partkey", "p_brand", "p_name")
+      .select(col("p_partkey"), col("p_brand"), lower(col("p_name")).as("name"))
+    val a = part.select(col("p_partkey").as("key_a"), col("p_brand").as("brand"),
+      col("name").as("name_a"))
+    val b = part.select(col("p_partkey").as("key_b"), col("p_brand").as("brand_b"),
+      col("name").as("name_b"))
+    val q = a.join(b, col("brand") === col("brand_b") && col("key_a") < col("key_b") &&
+        expr("trigram_similarity(name_a, name_b) >= 0.55"))
+      .select(col("key_a"), col("key_b"))
+    val (plan, rows) = withRule(on = true)(
+      (q.queryExecution.optimizedPlan, q.collect().map(r => (r.getLong(0), r.getLong(1))).toSet))
+    assert(rows == Set((1L, 2L), (3L, 4L)))
+    val joins = plan.collect {
+      case j: Join if j.condition.exists(_.exists(_.isInstanceOf[TrigramSimSorted])) => j
+    }
+    assert(joins.size == 1, plan.treeString)
+    val join = joins.head
+    // predicate pushdown folded the rewrite's cost-ordered Filter into
+    // the join condition: the integer-only positional prune must come
+    // before the first sorted-merge similarity for And to short-circuit
+    val conjuncts = splitConjuncts(join.condition.get)
+    val prune = conjuncts.indexWhere {
+      case GreaterThanOrEqual(_: Least, _) => true
+      case _ => false
+    }
+    val firstSim = conjuncts.indexWhere(_.exists(_.isInstanceOf[TrigramSimSorted]))
+    assert(prune >= 0 && firstSim >= 0, conjuncts.mkString("\n"))
+    assert(prune < firstSim, conjuncts.mkString("\n"))
+    // a self-join ties on size, so the left side streams and only its
+    // gram explode sits on a round-robin spread
+    def spreadsUnderExplode(side: LogicalPlan): Int = side.collect {
+      case g @ Generate(_: PosExplode, _, _, _, _, _) =>
+        g.child.collect { case r: Repartition if r.shuffle => r }.size
+    }.sum
+    assert(spreadsUnderExplode(join.left) == 1, join.left.treeString)
+    assert(spreadsUnderExplode(join.right) == 0, join.right.treeString)
+  }
+
+  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
+    case other => Seq(other)
   }
 
   test("non-literal thresholds are left alone (still correct, just naive)") {
